@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs the headline queries on
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line
@@ -127,42 +126,8 @@ object Bench {
     }
     sweepStaleScratch(progress)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Let AQE swap sort-merge for shuffled-hash when EVERY build-side
-      // partition is measured under this threshold — the analytic joins
-      // here are hash-friendly (DuckDB's default), and the conversion is
-      // scale-safe by construction: at 100× data the partitions exceed
-      // the bound and AQE leaves the sort-merge plan alone.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m")
-      // 64 MB broadcast threshold (default 10 MB predates boxes like this
-      // one): a 2M-row projected dimension broadcasts and the fact side
-      // joins map-side with NO shuffle. Scale-safe by the same mechanism
-      // that makes the default safe — a dimension that outgrows the
-      // threshold at a bigger SF simply stops broadcasting.
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // The fixtures are one parquet file per table; default 128 MB splits
-      // leave a 1.3 GB lineitem scanning on 11 of 32 cores and a 112 MB
-      // events table on ONE. 32 MB splits spread single-file scans wide;
-      // on a real multi-file layout at scale the knob is simply neutral
-      // (files already outnumber cores).
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SPLIT_BYTES", "33554432"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // Shuffle files on local disk are reclaimed only when the driver
-      // GCs the shuffle objects; the 30-min default periodic GC let a
-      // full run accumulate 55 GB of /tmp/blockmgr-* (measured r8),
-      // which first starved the page cache (the sf10 CoW cells ran 3x
-      // slow) and then ENOSPC'd the sf100 block. 90 s keeps the
-      // high-water mark near one section's working set.
-      .config("spark.cleaner.periodicGC.interval", "90s")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     // Mute ALL logging for the whole timed run (not only at exit): the
     // driver's tail is a combined stream, and any log line emitted after
     // the latest checkpoint print erodes the ~2000-char window the final
@@ -237,7 +202,7 @@ object Bench {
         if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
       }
       def cpuFrac: Double =
-        its.map(_.procCpuSec).sum / math.max(times.sum * cpus.toInt, 1e-9)
+        its.map(_.procCpuSec).sum / math.max(times.sum * cpus, 1e-9)
     }
 
     // Results accumulate INCREMENTALLY so the checkpoint line mid-loop

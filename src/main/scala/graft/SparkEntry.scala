@@ -1,5 +1,6 @@
 package graft
 
+import graft.GraftSession.withConf
 import graft.core.{MatView, Merge, TableStore}
 import graft.curation.{Sampling, Scd2}
 import graft.ext.{Chunking, Clustering, Contamination, Dedup, Dsir, KMeans, Mixing, Multimodal, Packing, ProductQuantization, Redaction, Similarity, TextAnalysis}
@@ -135,12 +136,12 @@ object SparkEntry {
       * triggers instead of 4 on q158/q177 (each extra trigger pays the
       * full foreachBatch body + offset/commit-log fsyncs + state-store
       * commits; opt guide §1.2 "remove unnecessary passes"). */
-    def stage(batch: DataFrame): Seq[(java.nio.file.Path, java.nio.file.Path)] = {
+    def stage(batch: DataFrame): FileReplay.Staged = {
       val st = java.nio.file.Files.createTempDirectory("graft_stage")
       batch.coalesce(1).write.mode("overwrite").parquet(st.toString)
-      st.toFile.listFiles.toSeq
+      FileReplay.Staged(st.toFile.listFiles.toSeq
         .filter(f => f.isFile && f.getName.startsWith("part-"))
-        .map(f => (f.toPath, java.nio.file.Paths.get(dir, f.getName)))
+        .map(f => (f.toPath, java.nio.file.Paths.get(dir, f.getName))), Some(st))
     }
     /** Stage `n` contiguous event-time slices of `rows` — replay order =
       * event-time order, same bucketing as `timeSlices` — plus one
@@ -150,10 +151,17 @@ object SparkEntry {
       * 5 sequential jobs per source per replay; opt guide §1.2 "remove
       * unnecessary passes"). Returns one landable group per slice then
       * per extra, in replay order; a group is empty iff its slice got no
-      * rows (nothing lands, no trigger — same appended result set). */
+      * rows (nothing lands, no trigger — same appended result set). The
+      * last group carries the staging dir, so it is deleted once every
+      * group has landed in order.
+      *
+      * A row whose `tsCol` is NULL gets a NULL slice: it is written under
+      * `__slice=__HIVE_DEFAULT_PARTITION__`, which no group lands, so it
+      * is never replayed — as in `timeSlices`, whose `bucket === b`
+      * filters drop it too. Event-time replays have no place for such a
+      * row, and the events fixture every replay derives from has none. */
     def stageSlices(rows: DataFrame, tsCol: String, n: Int,
-        extras: Seq[DataFrame] = Seq.empty)
-        : Seq[Seq[(java.nio.file.Path, java.nio.file.Path)]] = {
+        extras: Seq[DataFrame] = Seq.empty): Seq[FileReplay.Staged] = {
       val st = java.nio.file.Files.createTempDirectory("graft_stage")
       val mm = rows.agg(min(col(tsCol)).cast("double"),
         max(col(tsCol)).cast("double")).head
@@ -170,12 +178,14 @@ object SparkEntry {
       // directory names, so landed files carry exactly the source schema
       all.coalesce(1).write.mode("overwrite")
         .partitionBy("__slice").parquet(st.toString)
-      (0 until n + extras.size).map { i =>
+      val last = n + extras.size - 1
+      (0 to last).map { i =>
         val d = new java.io.File(st.toFile, s"__slice=$i")
-        Option(d.listFiles).map(_.toSeq).getOrElse(Seq.empty)
+        FileReplay.Staged(Option(d.listFiles).map(_.toSeq).getOrElse(Seq.empty)
           .filter(f => f.isFile && f.getName.startsWith("part-"))
           // prefix with the slice: one job reuses file names across dirs
-          .map(f => (f.toPath, java.nio.file.Paths.get(dir, s"s$i-${f.getName}")))
+          .map(f => (f.toPath, java.nio.file.Paths.get(dir, s"s$i-${f.getName}"))),
+          if (i == last) Some(st) else None)
       }
     }
     /** [[stageSlices]] + land-and-wait per group: the single-source
@@ -200,17 +210,32 @@ object SparkEntry {
   }
 
   private object FileReplay {
+    /** Staged files as (staged path, path in the watched directory)
+      * moves, plus the staging dir to delete once they have moved. */
+    final case class Staged(moves: Seq[(java.nio.file.Path, java.nio.file.Path)],
+        dir: Option[java.nio.file.Path])
+
     /** Make every staged file visible in its watched directory
       * back-to-back: atomic same-filesystem renames with no Spark job in
       * between, closing the one-trigger-per-side race (see
-      * [[FileReplay.stage]]). */
-    def landTogether(
-        staged: Seq[Seq[(java.nio.file.Path, java.nio.file.Path)]]): Unit =
-      staged.flatten.foreach { case (src, dst) =>
+      * [[FileReplay.stage]]). Then delete the emptied staging dirs.
+      *
+      * The renames are not one atomic step: a directory listing that
+      * falls between the two sides' renames still sees only the first
+      * side, which then becomes a trigger of its own. Each side's rows are
+      * still processed exactly once, and under the default `min`
+      * multi-watermark policy the side that lands first cannot move the
+      * watermark past the other, so the joined result is the same; only
+      * the trigger count grows by one. Back-to-back renames keep that
+      * window to microseconds against the stream's listing interval. */
+    def landTogether(staged: Seq[Staged]): Unit = {
+      staged.flatMap(_.moves).foreach { case (src, dst) =>
         java.nio.file.Files.move(src, dst,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         ()
       }
+      staged.flatMap(_.dir).foreach(graft.tools.TpcdsIngest.deleteRecursively)
+    }
   }
 
   /** Run a foreachBatch body against a PERSISTED micro-batch frame.
@@ -224,7 +249,7 @@ object SparkEntry {
     try body(b) finally { b.unpersist(); () }
   }
 
-  /** Run a streaming replay with no-data micro-batches disabled. A
+  /** Conf for a streaming replay with no-data micro-batches disabled. A
     * watermark-only trigger pays the full per-trigger fixed cost
     * (incremental re-plan, offset/commit-log writes, one state-store
     * commit per partition per stateful op) and roughly DOUBLES the
@@ -233,12 +258,13 @@ object SparkEntry {
     * sentinel outer joins (the second sentinel's DATA batch flushes
     * everything the first sentinel's watermark proved unmatched), inner
     * interval joins and first-seen dedup (emit on data batches only). */
-  private def withoutNoDataBatches[T](s: SparkSession)(body: => T): T = {
-    val k = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.get(k, "true")
-    s.conf.set(k, "false")
-    try body finally s.conf.set(k, prev)
-  }
+  private val NoDataBatchesOff =
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
+
+  /** Conf for a stateful replay on the RocksDB state store. */
+  private val RocksDbStateStore =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Split a fixture frame into `n` contiguous event-time slices (replay
     * order = event-time order, so watermarks only move forward and no
@@ -462,9 +488,7 @@ object SparkEntry {
       // suits the fixture-scale state — the dominant cost is per-partition
       // state-store commit files per micro-batch, not data volume. The
       // conf stays set for the whole feed and is restored after stop().
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try withoutNoDataBatches(s) {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8", NoDataBatchesOff) {
         val q = agg.writeStream
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .option("checkpointLocation", ckpt)
@@ -490,7 +514,7 @@ object SparkEntry {
               "__sentinel", 0.0))
               .toDF("event_id", "ts", "event_type", "value")))
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       store.read("win")
         .filter(col("event_type") =!= "__sentinel")
         .select(col("window_start"), col("event_type"), col("n_events"),
@@ -1582,9 +1606,7 @@ object SparkEntry {
       val uniq = graft.streaming.CdcStream.dedupFirstWithinWatermark(
         keyed, Seq("user_id", "event_type", "day"), "48 hours")
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try withoutNoDataBatches(s) {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8", NoDataBatchesOff) {
         val q = uniq.writeStream
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .option("checkpointLocation", ckpt)
@@ -1600,7 +1622,7 @@ object SparkEntry {
           .start()
         try replay.feedSlices(q, ev, "ts", 3)
         finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       store.read("uniq")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_unique"))
@@ -1789,13 +1811,11 @@ object SparkEntry {
       val joined = graft.streaming.CdcStream.intervalJoin(
         lr.source, rr.source, "user_id", "ts", "1 HOUR", "48 hours")
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
       // 4 state partitions: the interval join keeps BOTH sides' state, and
       // the dominant anchor cost is per-partition state-store commit files
       // per micro-batch (each feed = one batch × partitions × 2 sides),
       // not data volume — see the q68 note.
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try withoutNoDataBatches(s) {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4", NoDataBatchesOff) {
         val q = joined.writeStream
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .option("checkpointLocation", ckpt)
@@ -1818,7 +1838,7 @@ object SparkEntry {
             q.processAllAvailable()
           }
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       store.read("pairs")
         .groupBy(col("r_event_type").as("r_type"))
         .agg(count(lit(1)).as("n_pairs"), dsumd(col("value")).as("total_l_value"))
@@ -1843,9 +1863,7 @@ object SparkEntry {
       val sessions = graft.streaming.CdcStream.sessionize(
         replay.source.as[graft.streaming.Event], gapMinutes = 30, "1 hour")
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try withoutNoDataBatches(s) {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8", NoDataBatchesOff) {
         val q = sessions.toDF().writeStream
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .option("checkpointLocation", ckpt)
@@ -1874,7 +1892,7 @@ object SparkEntry {
                 .toDF("user_id", "ts", "event_type", "value"))
           }
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       store.read("sess")
         .filter(col("user_id") =!= -1L)
         .groupBy(col("user_id"))
@@ -2353,14 +2371,11 @@ object SparkEntry {
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.catalog.GraftCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$cat.warehouse", store.warehouse)
-      val confs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.adaptive.enabled" -> "false")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      withConf(s,
+          "spark.sql.sources.v2.bucketing.enabled" -> "true",
+          "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.enabled" -> "false") {
         val joined = s.sql(
           s"""SELECT o.o_orderstatus, l.l_extendedprice
              |FROM $cat.ns.ord o JOIN $cat.ns.li l
@@ -2381,9 +2396,6 @@ object SparkEntry {
           .orderBy(col("o_orderstatus"))
           // materialize INSIDE the conf window so the exec plan is SPJ's
           .localCheckpoint(true)
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     }),
 
@@ -2730,9 +2742,7 @@ object SparkEntry {
       val sink = tmpStore(s)
       val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = s.readStream.option("maxVersionsPerTrigger", "1")
           .table(s"$cat.ns.ev")
           .writeStream
@@ -2748,7 +2758,7 @@ object SparkEntry {
           }
           .start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       sink.read("out").groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           dsumd(col("value")).as("total_value"))
@@ -4025,9 +4035,7 @@ object SparkEntry {
         lr.source, rr.source, "user_id", "ts", "1 HOUR", "48 hours",
         joinType = "leftOuter")
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try withoutNoDataBatches(s) {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4", NoDataBatchesOff) {
         val q = joined.writeStream
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .option("checkpointLocation", ckpt)
@@ -4060,7 +4068,7 @@ object SparkEntry {
             Seq(rr.stage(sentinel(20)), lr.stage(sentinel(20))))
           q.processAllAvailable()
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       store.read("enriched").orderBy(col("event_id"), col("r_event_type"))
     }),
 
@@ -4528,9 +4536,7 @@ object SparkEntry {
         lr.source, rr.source, "user_id", "ts", "1 HOUR", "48 hours",
         joinType = "fullOuter")
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try withoutNoDataBatches(s) {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4", NoDataBatchesOff) {
         val q = joined.writeStream
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .option("checkpointLocation", ckpt)
@@ -4566,7 +4572,7 @@ object SparkEntry {
             Seq(rr.stage(sentinel(20)), lr.stage(sentinel(20))))
           q.processAllAvailable()
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       store.read("joined")
         .orderBy(col("user_id"), col("l_event_id"), col("r_event_id"))
     }),
@@ -4773,13 +4779,7 @@ object SparkEntry {
       val profiles = graft.streaming.StatefulOps.runningProfiles(
         replay.source.as[graft.streaming.Event])
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = s.conf.getOption(provKey)
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8", RocksDbStateStore) {
         val q = profiles.toDF().writeStream
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
           .option("checkpointLocation", ckpt)
@@ -4794,12 +4794,6 @@ object SparkEntry {
           .start()
         try timeSlices(ev, "ts", 3).foreach(replay.feed(q, _))
         finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        prevProv match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
       }
       store.read("prof")
         .groupBy(col("user_id"))
@@ -4953,13 +4947,8 @@ object SparkEntry {
         watermarkDelay = "0 seconds")
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       val sinkName = "q188_sink"
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = s.conf.getOption(provKey)
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try withoutNoDataBatches(s) {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8", RocksDbStateStore,
+          NoDataBatchesOff) {
         val q = expiries.toDF().writeStream.format("memory")
           .queryName(sinkName)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
@@ -4978,12 +4967,6 @@ object SparkEntry {
               .toDF("user_id", "ts", "event_type", "value"))
           }
         } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        prevProv match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
       }
       s.table(sinkName)
         .filter(col("user_id") >= 0)

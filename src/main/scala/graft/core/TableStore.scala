@@ -272,10 +272,8 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     // Write timestamps as TIMESTAMP_MICROS *for store files only*:
     // INT96 (Spark's session default) has no orderable footer stats.
     // Scoped set-and-restore so the session's own writes are untouched.
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try {
+    graft.GraftSession.withConf(spark,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
       val bloomOpts = bloomColumns
         .map(c => s"parquet.bloom.filter.enabled#${colMap.getOrElse(c, c)}" ->
           "true").toMap
@@ -294,9 +292,6 @@ class TableStore(spark: SparkSession, val warehouse: String) {
           .partitionBy(partitionBy.map(c => s"__p_$c"): _*)
           .parquet(dataDir.toString)
       }
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
     }
     // Partition-directory values are only foldable into min=max stats
     // when the path rendering round-trips through the comparison domain.
@@ -1263,18 +1258,19 @@ class TableStore(spark: SparkSession, val warehouse: String) {
           .select(col("__idx"), col("__mn").cast(castType).as("__mn"),
             col("__mx").cast(castType).as("__mx"))
       }
-      // A stat that does not cast into the comparison domain (null bound)
-      // can never match the range predicate — that file must be
-      // conservatively hit, not silently pruned.
-      val nullIdx = rangesDf
+      // One query for both kinds of hit: files whose range holds a key,
+      // and files whose stat does not cast into the comparison domain (a
+      // null bound can never match the range predicate, so such a file
+      // must be conservatively hit, not silently pruned).
+      val hitIdx = rangesDf
         .filter(col("__mn").isNull || col("__mx").isNull)
-        .select(col("__idx")).collect().map(_.getInt(0)).toSet
-      val hitIdx = keys.select(keyExpr.as("__k")).distinct()
-        .join(broadcast(rangesDf),
-          col("__k") >= col("__mn") && col("__k") <= col("__mx"))
-        .select(col("__idx")).distinct().collect().map(_.getInt(0)).toSet
-      val (h, u) = group.zipWithIndex.partition(p =>
-        hitIdx(p._2) || nullIdx(p._2))
+        .select(col("__idx"))
+        .union(keys.select(keyExpr.as("__k")).distinct()
+          .join(broadcast(rangesDf),
+            col("__k") >= col("__mn") && col("__k") <= col("__mx"))
+          .select(col("__idx")))
+        .distinct().collect().map(_.getInt(0)).toSet
+      val (h, u) = group.zipWithIndex.partition(p => hitIdx(p._2))
       (h.map(_._1), u.map(_._1))
     }
     val grouped = statFiles.groupBy(_.stats(column).kind).toSeq

@@ -3,7 +3,9 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Mirrors the driver's t1 smoke: SparkEntry.entry(spark) must return >0
-  * rows on sf0.001 under a session the driver would build (no extensions). */
+  * rows on sf0.001 under a session the driver would build (no extensions).
+  * The only main that does not use [[graft.GraftSession]]: its bare,
+  * extension-less builder is the point of the check. */
 object Smoke {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()

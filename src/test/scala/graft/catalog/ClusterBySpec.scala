@@ -1,5 +1,6 @@
 package graft.catalog
 
+import graft.GraftSession.withConf
 import graft.SparkSpec
 import graft.core.TableStore
 import org.apache.spark.sql.functions._
@@ -31,12 +32,8 @@ class ClusterBySpec extends SparkSpec {
       .createOrReplaceTempView("cb_src")
     // pin the range shuffle at 4 output partitions (AQE would coalesce
     // this tiny write to one) so the multi-file layout is observable
-    val prevCoalesce =
-      spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try spark.sql(s"INSERT INTO $cat.ns.t SELECT * FROM cb_src")
-    finally spark.conf.set(
-      "spark.sql.adaptive.coalescePartitions.enabled", prevCoalesce)
+    withConf(spark, "spark.sql.adaptive.coalescePartitions.enabled" -> "false")(
+      spark.sql(s"INSERT INTO $cat.ns.t SELECT * FROM cb_src"))
     val m = store.manifests("t").maxBy(_.version)
     val ranges = m.files.flatMap(_.stats.get("k"))
       .map(cs => (cs.min.toLong, cs.max.toLong)).sortBy(_._1)
@@ -69,13 +66,9 @@ class ClusterBySpec extends SparkSpec {
     spark.range(0, 5000).select((col("id") * 17 % 5000).as("k"),
         col("id").as("v"))
       .repartition(6).createOrReplaceTempView("cb_src2")
-    val prevCoalesce =
-      spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try spark.sql(s"CREATE TABLE $cat.ns.t USING graft CLUSTER BY (k) " +
-      "AS SELECT * FROM cb_src2")
-    finally spark.conf.set(
-      "spark.sql.adaptive.coalescePartitions.enabled", prevCoalesce)
+    withConf(spark, "spark.sql.adaptive.coalescePartitions.enabled" -> "false")(
+      spark.sql(s"CREATE TABLE $cat.ns.t USING graft CLUSTER BY (k) " +
+        "AS SELECT * FROM cb_src2"))
     val m = store.manifests("t").maxBy(_.version)
     assert(store.manifests("t").map(_.operation) == Seq("create"))
     assert(m.writeOrder == Seq("k"))

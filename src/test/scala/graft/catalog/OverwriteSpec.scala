@@ -21,12 +21,9 @@ class OverwriteSpec extends SparkSpec {
     f(new TableStore(spark, wh), cat)
   }
 
-  private def withMode(mode: String)(f: => Unit): Unit = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, mode)
-    try f finally spark.conf.set(key, prev)
-  }
+  private def withMode(mode: String)(f: => Unit): Unit =
+    graft.GraftSession.withConf(spark,
+      "spark.sql.sources.partitionOverwriteMode" -> mode)(f)
 
   test("dynamic overwrite replaces only the partitions the query writes") {
     withCatalog { (store, cat) =>

@@ -23,19 +23,12 @@ class SpjSpec extends SparkSpec {
     f(new TableStore(spark, wh), cat)
   }
 
-  private def withSpjConf(f: => Unit): Unit = {
-    val keys = Seq(
+  private def withSpjConf(f: => Unit): Unit =
+    graft.GraftSession.withConf(spark,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.adaptive.enabled" -> "false")(f)
 
   private def shuffles(plan: SparkPlan): Int = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}

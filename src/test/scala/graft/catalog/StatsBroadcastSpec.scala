@@ -1,5 +1,6 @@
 package graft.catalog
 
+import graft.GraftSession.withConf
 import graft.SparkSpec
 import graft.core.TableStore
 import org.apache.spark.sql.functions._
@@ -112,12 +113,12 @@ class StatsBroadcastSpec extends SparkSpec {
     store.commit("other", (0 until 40000).map(i =>
       (s"k${i % 200}", i.toLong)).toDF("key", "v"), "create")
     store.analyzeTable("big")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     // ~1.5% of the table's bytes: full scans must NOT broadcast, the
     // 1/200th-filtered branch must
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-      (store.manifests("big").maxBy(_.version).files.map(_.sizeBytes).sum / 64).toString)
-    try {
+    val threshold =
+      store.manifests("big").maxBy(_.version).files.map(_.sizeBytes).sum / 64
+    withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> threshold.toString) {
       def joinPlan(where: String) = spark.sql(
         s"SELECT o.key, count(*) AS n FROM $cat.ns.other o " +
           s"JOIN $cat.ns.big b ON o.key = b.key $where " +
@@ -128,9 +129,6 @@ class StatsBroadcastSpec extends SparkSpec {
       val filtered = joinPlan("WHERE b.key = 'k7'")
       assert(filtered.toString.contains("BroadcastHashJoin"),
         s"filtered branch should broadcast statically:\n$filtered")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 
@@ -138,11 +136,10 @@ class StatsBroadcastSpec extends SparkSpec {
     val (_, cat, store) = freshCat()
     store.commit("t", uniformDf, "create")
     store.analyzeTable("t")
-    spark.conf.set("spark.graft.stats.filterEstimation", "false")
-    try {
+    withConf(spark, "spark.graft.stats.filterEstimation" -> "false") {
       val full = scanStats(s"SELECT * FROM $cat.ns.t").sizeInBytes
       val filtered = scanStats(s"SELECT * FROM $cat.ns.t WHERE key = 'k7'")
       assert(filtered.sizeInBytes == full)
-    } finally spark.conf.unset("spark.graft.stats.filterEstimation")
+    }
   }
 }

@@ -92,8 +92,7 @@ class AnalyzeSpec extends SparkSpec {
     val store = new TableStore(spark, wh)
     store.commit("t", df, "create")
     store.analyzeTable("t")
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    try {
+    graft.GraftSession.withConf(spark, "spark.sql.cbo.enabled" -> "true") {
       val stats = spark.sql(s"SELECT id, grp, maybe FROM $cat.ns.t")
         .queryExecution.optimizedPlan.stats
       assert(stats.rowCount.exists(_.toLong == 2000L))
@@ -102,7 +101,7 @@ class AnalyzeSpec extends SparkSpec {
         s"expected ANALYZE column stats in the plan, got ${byName.keys}")
       assert(byName("grp").distinctCount.exists(_.toLong == 12L))
       assert(byName("maybe").nullCount.exists(_.toLong == 400L))
-    } finally spark.conf.set("spark.sql.cbo.enabled", "false")
+    }
   }
 
   test("a zero-row snapshot ANALYZEs to zeros instead of failing") {

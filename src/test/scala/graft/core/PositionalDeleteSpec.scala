@@ -1,5 +1,6 @@
 package graft.core
 
+import graft.GraftSession.withConf
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -89,8 +90,7 @@ class PositionalDeleteSpec extends SparkSpec {
     // bare key: SessionState.newHadoopConf copies session-conf entries
     // verbatim into the writer's hadoop conf (the spark.hadoop. prefix
     // only works on the static SparkConf at context start)
-    spark.conf.set("parquet.block.size", "4096")
-    try {
+    withConf(spark, "parquet.block.size" -> "4096") {
       val store = new TableStore(spark, wh)
       val pad = "x" * 64
       store.commit("t",
@@ -148,15 +148,13 @@ class PositionalDeleteSpec extends SparkSpec {
       // the parquet-mr (row-based) reader path: same answer with the
       // vectorized reader off — covers addRowIndexToRecordReaderIfNeeded
       // and the reader's projecting row
-      spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
-      try {
+      withConf(spark, "spark.sql.parquet.enableVectorizedReader" -> "false") {
         val rowPath = spark.sql(
             s"SELECT id FROM $cat.ns.t WHERE id > 15000 ORDER BY id")
           .as[Long].collect().toSeq
         assert(rowPath == want)
-      } finally
-        spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
-    } finally spark.conf.unset("parquet.block.size")
+      }
+    }
   }
 
   test("rewritePositionDeletes consolidates the overlay; reads unchanged; SQL mask is bitmap-backed") {
