@@ -134,7 +134,8 @@ class GraftRowLevelOperation(spark: SparkSession, catalogName: String,
       val inLists = RuntimePruning.inListsOf(predicates)
       if (inLists.nonEmpty) {
         val (hit, dropped) = RuntimePruning.pruneByInLists(
-          new TableStore(spark, warehouse), tableName, hitFiles, inLists)
+          new TableStore(spark, warehouse), tableName, hitFiles, inLists,
+          tableSchema)
         hitFiles = hit
         keptFiles = keptFiles ++ dropped
         inner = null // rebuild the parquet scan over the pruned file set

@@ -4,7 +4,7 @@ import graft.core.TableStore
 import graft.core.TableStore.{ColStats, FileEntry}
 import org.apache.spark.sql.connector.expressions.{Literal, NamedReference}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, DateType, StructType, TimestampNTZType, TimestampType}
 
 /** Shared runtime file-pruning machinery for scans implementing
   * `SupportsRuntimeV2Filtering` — used by both the row-level-operation
@@ -61,6 +61,26 @@ object RuntimePruning {
     }
   }
 
+  /** A value as a "string" stat would spell it, when that spelling is
+    * exact: strings, integers and booleans as themselves, DATE values
+    * (epoch days or date objects) as ISO dates. None for everything else
+    * (timestamps, fractional numbers), whose text forms differ between
+    * partition paths, Spark casts and `toString`. */
+  private def asStatString(v: Any, dataType: Option[DataType]): Option[String] =
+    (v, dataType) match {
+      case (s: String, _) => Some(s)
+      case (d: java.sql.Date, _) => Some(d.toLocalDate.toString)
+      case (d: java.time.LocalDate, _) => Some(d.toString)
+      case (_, Some(_: TimestampType | _: TimestampNTZType)) => None
+      case (n @ (_: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
+          _: java.lang.Byte), dt) =>
+        val l = n.asInstanceOf[Number].longValue()
+        if (dt.contains(DateType)) Some(java.time.LocalDate.ofEpochDay(l).toString)
+        else Some(l.toString)
+      case (b: java.lang.Boolean, _) => Some(b.toString)
+      case _ => None
+    }
+
   /** Extract single-column `IN (values…)` lists from runtime predicates. */
   def inListsOf(predicates: Array[Predicate]): Seq[(String, Seq[Any])] =
     predicates.toSeq.collect {
@@ -93,9 +113,20 @@ object RuntimePruning {
     * seconds per query. Files whose stat is EXACT (min == max — identity
     * partition values, constant columns) are decided by the range probe
     * alone: membership is definitive, so the per-file parquet-footer
-    * bloom read is skipped. */
+    * bloom read is skipped.
+    *
+    * Values arrive in Spark's internal domain (DATE as epoch-day ints,
+    * TIMESTAMP as epoch micros), which is also the domain of footer
+    * "long" stats. Against "string" stats (identity-partition values)
+    * they are rendered by the column's type in `schema`: DATE as an ISO
+    * date, plain strings, integers and booleans as themselves. A value
+    * with no exact rendering keeps every file of that kind.
+    * [[TableStore.filesHitByKeys]] decides copy-on-write MERGE file hits
+    * through this same routine. */
   def pruneByInLists(store: TableStore, table: String, files: Seq[FileEntry],
-      inLists: Seq[(String, Seq[Any])]): (Seq[FileEntry], Seq[FileEntry]) = {
+      inLists: Seq[(String, Seq[Any])], schema: StructType)
+      : (Seq[FileEntry], Seq[FileEntry]) = {
+    val typeOf = schema.fields.map(f => f.name -> f.dataType).toMap
     val probes = scala.collection.mutable.HashMap.empty[(String, String), AnyRef]
     // "keep" = some literal is uninterpretable in this kind's domain →
     // every file of that kind stays (old cmpStat-None semantics);
@@ -128,10 +159,14 @@ object RuntimePruning {
             if (keepAll) "keep"
             else { val a = out.result(); java.util.Arrays.sort(a); a }
           case _ =>
-            val a = vals.map(_.toString).toArray
-            java.util.Arrays.sort(a, (x: String, y: String) =>
-              TableStore.utf8Cmp(x, y))
-            a
+            val rendered = vals.map(v => asStatString(v, typeOf.get(c)))
+            if (rendered.contains(None)) "keep"
+            else {
+              val a = rendered.flatten.toArray
+              java.util.Arrays.sort(a, (x: String, y: String) =>
+                TableStore.utf8Cmp(x, y))
+              a
+            }
         }
       })
     // first sorted element ≥ lo, if any, must be ≤ hi

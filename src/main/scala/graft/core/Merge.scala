@@ -25,11 +25,17 @@ import org.apache.spark.sql.functions._
   *    count over the join output + assert_true), so a merge is one query
   *    execution with no separate probe pass over target and source.
   *
-  * Scale: the plan is one shuffle (the outer join) plus a map-side
-  * projection, over only the target files the source's key range can
-  * touch (file-level copy-on-write, see `run`). A low-shuffle variant
-  * (broadcast semi/anti pre-split of the target) lost its A/B to this
-  * plan on 2 of 3 layouts, so it was removed.
+  * Scale: a merge runs two Spark queries. The first collects the source's
+  * distinct merge keys, at most `bloomMaxKeys + 1` of them, and the
+  * driver matches them against the manifest's per-file ranges and the
+  * files' bloom filters to find the target files they can touch
+  * ([[TableStore.filesHitByKeys]]; only a larger key set adds a broadcast
+  * range join). The second is the merge plan: one shuffle (the outer join)
+  * plus a map-side projection over only those files, whose output is
+  * committed with every other file carried over untouched (file-level
+  * copy-on-write, see `run`). A low-shuffle variant (broadcast semi/anti
+  * pre-split of the target) lost its A/B to this plan on 2 of 3 layouts,
+  * so it was removed.
   *
   * In clause conditions/assignments, refer to source columns with
   * [[Merge.source]] and to target columns by plain name.
@@ -302,12 +308,12 @@ final class MergeBuilder private[core] (store: TableStore, table: String) {
     // replan loop re-reads the rival's snapshot) instead of being
     // silently dropped by an allocate-past-it commit.
     val base = store.manifests(table).maxBy(_.version)
-    // File-level copy-on-write: only target files whose [min,max] range
-    // for the first merge key overlaps the source's key bounds are
-    // rewritten; the rest carry into the new snapshot untouched. Effective
-    // when the table is clustered on the merge key (the standard layout
-    // for CDC targets); falls back to a full rewrite when stats are
-    // missing or every file is hit.
+    // File-level copy-on-write: only target files that may hold a source
+    // key of the first merge key (by [min,max] range, then bloom filter)
+    // are rewritten; the rest carry into the new snapshot untouched.
+    // Effective when the table is clustered on the merge key (the standard
+    // layout for CDC targets) or has a bloom on it; falls back to a full
+    // rewrite when stats are missing or every file is hit.
     val pruned = keys.headOption.flatMap { case (tk, sk) =>
       val (hit, untouched) =
         store.filesHitByKeys(table, tk, src.select(col(sk)).na.drop())
@@ -323,11 +329,11 @@ final class MergeBuilder private[core] (store: TableStore, table: String) {
         val merged = planAgainst(evolve(store.readFiles(table, hit)),
           base.version + 1)
         store.commitFiles(table, untouched, Some(merged), "merge", spec,
-          Seq.empty, baseVersion = base.version)
+          baseVersion = base.version)
       case None =>
         val merged = planAgainst(evolve(store.read(table)), base.version + 1)
         store.commitFiles(table, Seq.empty, Some(merged), "merge", spec,
-          Seq.empty, baseVersion = base.version)
+          baseVersion = base.version)
     }
   }
 }

@@ -194,6 +194,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       baseVersion: Long = -1L): Long = {
     val v =
       (if (baseVersion >= 0L) baseVersion else latestCommittedVersion(table)) + 1
+    val blooms = if (bloomColumns.nonEmpty) bloomColumns else bloomColumnsCarry(table)
     val newEntries = newData match {
       case Some(df) =>
         // Unique per-writer subdir: two writers racing to the same next
@@ -206,7 +207,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
         writeDataFiles(new Path(versionDir(table, v), s"w-$wid"),
           s"v=$v/w-$wid",
           applyWriteOrder(table, enforceConstraints(table, df), partitionBy),
-          partitionBy, bloomColumns, columnMapCarry(table).toMap)
+          partitionBy, blooms, columnMapCarry(table).toMap)
       case None => Seq.empty
     }
     val files = keptFiles ++ newEntries
@@ -222,7 +223,8 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       deleteFilesCarry(table, keptFiles),
       constraints = constraintsCarry(table),
       writeOrder = writeOrderCarry(table),
-      columnMap = columnMapCarry(table)))
+      columnMap = columnMapCarry(table),
+      bloomColumns = blooms))
     swapPointer(table, v)
     v
   }
@@ -274,7 +276,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     // Scoped set-and-restore so the session's own writes are untouched.
     graft.GraftSession.withConf(spark,
         "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
-      val bloomOpts = bloomColumns
+      val bloomOpts = bloomColumns.filter(dfLogical.columns.contains)
         .map(c => s"parquet.bloom.filter.enabled#${colMap.getOrElse(c, c)}" ->
           "true").toMap
       if (partitionBy.isEmpty)
@@ -347,6 +349,12 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       keptFiles: Seq[FileEntry]): Seq[String] =
     if (keptFiles.isEmpty) Seq.empty
     else manifests(table).lastOption.map(_.droppedColumns).getOrElse(Seq.empty)
+
+  /** Bloom-filter columns, carried like the partition spec so every later
+    * data-file write (merge, SCD2, append, merge-on-read) keeps writing
+    * the blooms that [[filesHitByKeys]] refines random keys with. */
+  private def bloomColumnsCarry(table: String): Seq[String] =
+    manifests(table).lastOption.map(_.bloomColumns).getOrElse(Seq.empty)
 
   /** Declared write sort order, carried like the partition spec. */
   private def writeOrderCarry(table: String): Seq[String] =
@@ -818,7 +826,8 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     writeManifest(table, m.copy(version = v,
       timestampMs = System.currentTimeMillis(),
       operation = s"rename_column $oldName->$newName",
-      files = rekeyed, schemaJson = newSchema.json, columnMap = newMap))
+      files = rekeyed, schemaJson = newSchema.json, columnMap = newMap,
+      bloomColumns = m.bloomColumns.map(c => if (c == oldName) newName else c)))
     swapPointer(table, v)
     v
   }
@@ -904,7 +913,8 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       deleteFilesCarry(table, keptFiles), streamEpoch,
       constraints = constraintsCarry(table),
       writeOrder = writeOrderCarry(table),
-      columnMap = columnMapCarry(table)))
+      columnMap = columnMapCarry(table),
+      bloomColumns = bloomColumnsCarry(table)))
     swapPointer(table, v)
     v
   }
@@ -1179,15 +1189,28 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     }
   }
 
-  /** Split the current snapshot's files into (hit, untouched) by joining
-    * the DISTINCT source keys against the per-file [min,max] ranges — a
-    * broadcast range join over the (tiny) file-range table, so a wide but
-    * sparse key set (e.g. one update + one far-away insert) does not smear
-    * into "every file is hit" the way whole-range bounds would. Files
-    * without stats for the column are conservatively hit. */
+  /** Split the current snapshot's files into (hit, untouched) for the
+    * source keys: the file scoping of copy-on-write MERGE and SCD2.
+    *
+    * One Spark query: collect the DISTINCT non-null keys, stopping at
+    * `bloomMaxKeys + 1`. Keys are normalized to the footer-stat and bloom
+    * domain (DATE to epoch days, TIMESTAMP to epoch micros). A key set
+    * within the bound is decided on the driver by
+    * [[graft.catalog.RuntimePruning.pruneByInLists]], the routine SQL
+    * runtime filtering uses: each file's [min,max] is probed with a binary
+    * search over the sorted keys, in that file's own stat-kind domain, and
+    * a range-hit file with a parquet bloom on the column is then tested
+    * against the bloom. Random keys (md5-style pks) make every range
+    * overlap every file, so the bloom is what separates them; it has no
+    * false negatives, so dropping a bloom-miss file is exact. Only a key
+    * set above the bound pays a second query, a broadcast range join of
+    * the keys against the per-file ranges, and skips the bloom step.
+    *
+    * A file is dropped only on an exact comparison: files without stats
+    * for the column, and files whose stat kind has no exact comparison
+    * with the key type, are conservatively hit. */
   def filesHitByKeys(table: String, column: String, keys: DataFrame)
       : (Seq[FileEntry], Seq[FileEntry]) = {
-    import org.apache.spark.sql.functions.{broadcast, unix_micros, datediff, to_date}
     val m = manifests(table).maxBy(_.version)
     // Bucket-transform partitions: map the raw keys to their buckets and
     // hit only matching bucket partitions. The distinct-bucket set is
@@ -1214,17 +1237,51 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     }
     val (statFiles, noStat) = m.files.partition(_.stats.contains(column))
     if (statFiles.isEmpty) return (m.files, Seq.empty)
+    val keyField = keys.schema.fields.head
+    // A null key matches no target row, so it can hit no file.
+    val keyVals = keys.select(statDomainKey(col(keyField.name), keyField.dataType)
+        .as("__k"))
+      .where(col("__k").isNotNull).distinct()
+      .limit(bloomMaxKeys + 1).collect().map(_.get(0)).toSeq
+    val (hit, untouched) =
+      if (keyVals.size <= bloomMaxKeys)
+        graft.catalog.RuntimePruning.pruneByInLists(this, table, statFiles,
+          Seq(column -> keyVals),
+          org.apache.spark.sql.types.StructType(Seq(keyField.copy(name = column))))
+      else filesHitByRangeJoin(column, keys, statFiles)
+    (hit ++ noStat, untouched)
+  }
+
+  /** A key in the domain footer stats and blooms use: DATE as epoch days,
+    * TIMESTAMP as epoch micros (both long), anything else as itself. */
+  private def statDomainKey(k: Column,
+      keyType: org.apache.spark.sql.types.DataType): Column = {
+    import org.apache.spark.sql.types.{DateType, TimestampType}
+    keyType match {
+      case TimestampType => functions.unix_micros(k)
+      case DateType => functions.unix_date(k).cast("long")
+      case _ => k
+    }
+  }
+
+  /** The large-key-set fallback of [[filesHitByKeys]]: a broadcast range
+    * join of the DISTINCT keys over the (tiny) file-range table, so a wide
+    * but sparse key set (e.g. one update + one far-away insert) does not
+    * smear into "every file is hit" the way whole-range bounds would.
+    *
+    * Stat kinds can legitimately diverge across files of one column —
+    * e.g. a date column carries partition-derived "string" stats in
+    * partitioned commits and footer "long" (epoch-day) stats in a later
+    * unpartitioned append. Applying one file's kind to another file's raw
+    * stats would compare in the wrong domain and could WRONGLY prune
+    * (silently losing MERGE rows), so each kind group is ranged in its own
+    * domain; a group whose kind has no sound cast from the key type is
+    * conservatively hit. */
+  private def filesHitByRangeJoin(column: String, keys: DataFrame,
+      statFiles: Seq[FileEntry]): (Seq[FileEntry], Seq[FileEntry]) = {
+    import org.apache.spark.sql.functions.broadcast
     val keyRaw = col(keys.columns.head)
     val keyType = keys.schema.fields.head.dataType
-    import org.apache.spark.sql.types.{TimestampType, DateType}
-    // Stat kinds can legitimately diverge across files of one column —
-    // e.g. a date column carries partition-derived "string" stats in
-    // partitioned commits and footer "long" (epoch-day) stats in a later
-    // unpartitioned append. Applying one file's kind to another file's
-    // raw stats would compare in the wrong domain and could WRONGLY prune
-    // (silently losing MERGE rows), so each kind group is ranged in its
-    // own domain; a group whose kind has no sound cast from the key type
-    // is conservatively hit.
     def hitsForKind(kind: String, group: Seq[FileEntry])
         : (Seq[FileEntry], Seq[FileEntry]) = {
       val castType = kind match {
@@ -1233,15 +1290,9 @@ class TableStore(spark: SparkSession, val warehouse: String) {
         case d if d.startsWith("dec") => s"decimal(38,${d.stripPrefix("dec")})"
         case _ => "string"
       }
-      val keyExpr = (kind, keyType) match {
-        case ("long", TimestampType) => unix_micros(keyRaw)
-        case ("long", DateType) => datediff(keyRaw, to_date(lit("1970-01-01")))
-          .cast("long")
-        case ("long", _) => keyRaw.cast("long")
-        case ("double", _) => keyRaw.cast("double")
-        case (d, _) if d.startsWith("dec") => keyRaw.cast(castType)
-        case _ => keyRaw.cast("string")
-      }
+      val keyExpr =
+        if (kind == "long") statDomainKey(keyRaw, keyType).cast("long")
+        else keyRaw.cast(castType)
       // dec<scale> stats hold the unscaled integer — rehydrate to a plain
       // decimal rendering before the cast so ranges compare in value space
       val statStr: String => String =
@@ -1275,42 +1326,21 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     }
     val grouped = statFiles.groupBy(_.stats(column).kind).toSeq
       .map { case (kind, group) => hitsForKind(kind, group) }
-    var hit = grouped.flatMap(_._1)
-    var untouched = grouped.flatMap(_._2)
-    // Bloom refinement: random keys (md5-style pks) make every [min,max]
-    // range overlap every file, so range pruning degenerates to "rewrite
-    // all". When the key set is small (the CDC-merge case), test the keys
-    // against each candidate file's parquet bloom filter — no false
-    // negatives, so dropping a bloom-miss file is exact. Files without a
-    // bloom for the column stay conservatively hit.
-    if (hit.size > 1) {
-      // Bloom hashing follows the column's PHYSICAL type, so normalize by
-      // the key's own type (timestamps → epoch micros, dates → epoch days)
-      // rather than any one file's stat kind.
-      val bloomKeyExpr = keyType match {
-        case TimestampType => unix_micros(keyRaw)
-        case DateType => datediff(keyRaw, to_date(lit("1970-01-01"))).cast("long")
-        case _ => keyRaw
-      }
-      val keyVals = keys.select(bloomKeyExpr.as("__k")).distinct()
-        .limit(bloomMaxKeys + 1).collect().map(_.get(0)).toSeq
-      if (keyVals.size <= bloomMaxKeys) {
-        val (bh, bm) = hit.partition(fe => bloomMayContain(table, fe, column, keyVals))
-        hit = bh
-        untouched = untouched ++ bm
-      }
-    }
-    (hit ++ noStat, untouched)
+    (grouped.flatMap(_._1), grouped.flatMap(_._2))
   }
 
-  /** Max distinct keys [[filesHitByKeys]] will bloom-test driver-side;
-    * larger key sets fall back to range-only pruning. */
+  /** Max distinct keys [[filesHitByKeys]] collects and decides on the
+    * driver (range and bloom tests); larger key sets fall back to the
+    * range join, without bloom refinement. SQL runtime filtering skips the
+    * bloom test above the same bound. */
   var bloomMaxKeys: Int = 10000
 
   /** Could `fe` contain any of `keyVals` in `column`, per the file's
     * parquet bloom filters? Conservative true when no bloom exists; exact
     * (no false negatives) when one does. Hashing follows the column's
-    * physical type — mismatched hashing would silently lose rows. */
+    * physical type — mismatched hashing would silently lose rows. A file
+    * whose footer holds no bloom for the column is remembered (data files
+    * are immutable), so later merges do not reopen its footer. */
   private[graft] def bloomMayContain(table: String, fe: FileEntry, column: String,
       keyVals: Seq[Any]): Boolean = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -1318,10 +1348,18 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     // bloom of a renamed column would silently stop refining
     val physColumn = columnMapOf(table).getOrElse(column, column)
     val p = new Path(tableDir(table), fe.path)
+    val memoKey = s"$p#$physColumn"
+    if (TableStore.bloomlessFooters.contains(memoKey)) return true
     val in = HadoopInputFile.fromPath(p, spark.sparkContext.hadoopConfiguration)
     val reader = ParquetFileReader.open(in)
     try {
-      reader.getFooter.getBlocks.asScala.exists { b =>
+      val blocks = reader.getFooter.getBlocks.asScala
+      if (blocks.forall(_.getColumns.asScala.forall(c =>
+          c.getPath.toDotString != physColumn || c.getBloomFilterOffset < 0))) {
+        TableStore.rememberBloomless(memoKey)
+        return true
+      }
+      blocks.exists { b =>
         b.getColumns.asScala.find(_.getPath.toDotString == physColumn) match {
           case None => true
           case Some(c) =>
@@ -1511,7 +1549,8 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       (kept ++ entries).map(_.rowCount).sum, kept ++ entries, schemaJson, spec,
       droppedColumnsCarry(table, kept), deleteFilesCarry(table, kept),
       constraints = constraintsCarry(table),
-      writeOrder = writeOrderCarry(table)))
+      writeOrder = writeOrderCarry(table),
+      bloomColumns = bloomColumnsCarry(table)))
     swapPointer(table, v)
     v
   }
@@ -1908,7 +1947,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     writeManifest(table, Manifest(v, System.currentTimeMillis(),
       "delete_where_mor", m.files.map(_.rowCount).sum, m.files, m.schemaJson,
       m.partitionBy, m.droppedColumns, m.deleteFiles ++ delEntries, None,
-      m.constraints, m.writeOrder, m.columnMap))
+      m.constraints, m.writeOrder, m.columnMap, m.bloomColumns))
     swapPointer(table, v)
     v
   }
@@ -1982,7 +2021,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
         writeDataFiles(new Path(versionDir(table, v), s"w-$wid"),
           s"v=$v/w-$wid",
           applyWriteOrder(table, enforceConstraints(table, aligned),
-            m.partitionBy), m.partitionBy, Seq.empty, m.columnMap.toMap)
+            m.partitionBy), m.partitionBy, m.bloomColumns, m.columnMap.toMap)
     }
     // Distinct delete keys land under v=N/deletes-<writer>/ (their own
     // subdir so they can never be confused with the version's data files;
@@ -2039,7 +2078,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       (m.files ++ dataEntries).map(_.rowCount).sum, m.files ++ dataEntries,
       m.schemaJson, m.partitionBy, m.droppedColumns,
       m.deleteFiles ++ delEntries, streamEpoch, m.constraints,
-      m.writeOrder, m.columnMap))
+      m.writeOrder, m.columnMap, m.bloomColumns))
     swapPointer(table, v)
     v
   }
@@ -2119,7 +2158,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     writeManifest(table, Manifest(v, System.currentTimeMillis(),
       "compact_deletes", m.files.map(_.rowCount).sum, m.files, m.schemaJson,
       m.partitionBy, m.droppedColumns, delEntries ++ posCarry, None,
-      m.constraints, m.writeOrder, m.columnMap))
+      m.constraints, m.writeOrder, m.columnMap, m.bloomColumns))
     swapPointer(table, v)
     v
   }
@@ -2159,7 +2198,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     writeManifest(table, Manifest(v, System.currentTimeMillis(),
       "rewrite_position_deletes", m.files.map(_.rowCount).sum, m.files,
       m.schemaJson, m.partitionBy, m.droppedColumns, eqCarry ++ delEntries,
-      None, m.constraints, m.writeOrder, m.columnMap))
+      None, m.constraints, m.writeOrder, m.columnMap, m.bloomColumns))
     swapPointer(table, v)
     v
   }
@@ -2562,7 +2601,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     }: _*)
     val id = java.util.UUID.randomUUID().toString.take(8)
     val entries = writeDataFiles(new Path(tableDir(table), s"stage-$id"),
-      s"stage-$id", aligned, m.partitionBy, Seq.empty, m.columnMap.toMap)
+      s"stage-$id", aligned, m.partitionBy, m.bloomColumns, m.columnMap.toMap)
     // The staged manifest reuses the snapshot JSON shape (version 0 =
     // "not a version") and records ONLY the new entries: publish composes
     // them with whatever the table's files are AT PUBLISH time, so an
@@ -2723,7 +2762,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       val k = ops.size
       val entries = writeDataFiles(new Path(tableDir(table), s"txn-$id-$k"),
         s"txn-$id-$k", applyWriteOrder(table, df, partitionBy),
-        partitionBy, Seq.empty, columnMapCarry(table).toMap)
+        partitionBy, bloomColumnsCarry(table), columnMapCarry(table).toMap)
       writeManifestAt(txnStagedPath(table, id, k),
         Manifest(0L, System.currentTimeMillis(), s"txn_$shape",
           entries.map(_.rowCount).sum, entries, schemaJson, partitionBy,
@@ -2844,7 +2883,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
                 s"txn_append $marker", files.map(_.rowCount).sum, files,
                 m.schemaJson, m.partitionBy, m.droppedColumns, m.deleteFiles,
                 constraints = m.constraints, writeOrder = m.writeOrder,
-                columnMap = m.columnMap))
+                columnMap = m.columnMap, bloomColumns = m.bloomColumns))
             case "deletekeys" =>
               val m = manifests(table).maxBy(_.version)
               require(m.schemaJson == st.schemaJson,
@@ -2875,14 +2914,15 @@ class TableStore(spark: SparkSession, val warehouse: String) {
                 s"txn_deletekeys $marker", m.files.map(_.rowCount).sum,
                 m.files, m.schemaJson, m.partitionBy, m.droppedColumns,
                 m.deleteFiles ++ dels, None, m.constraints, m.writeOrder,
-                m.columnMap))
+                m.columnMap, m.bloomColumns))
             case _ =>
               writeManifest(table, Manifest(v, System.currentTimeMillis(),
                 s"txn_overwrite $marker", st.rowCount, st.files,
                 st.schemaJson, st.partitionBy,
                 constraints = constraintsCarry(table),
                 writeOrder = writeOrderCarry(table),
-                columnMap = columnMapCarry(table)))
+                columnMap = columnMapCarry(table),
+                bloomColumns = bloomColumnsCarry(table)))
           }
           swapPointer(table, v)
           out(table) = v
@@ -2971,7 +3011,7 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     }
     writeManifest(target, Manifest(1L, System.currentTimeMillis(), "clone",
       m.rowCount, files, m.schemaJson, m.partitionBy, m.droppedColumns,
-      Seq.empty, None, m.constraints, m.writeOrder, m.columnMap))
+      Seq.empty, None, m.constraints, m.writeOrder, m.columnMap, m.bloomColumns))
     swapPointer(target, 1L)
     1L
   }
@@ -3066,13 +3106,14 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     val bwid = java.util.UUID.randomUUID().toString.take(8)
     val entries = writeDataFiles(
       new Path(tableDir(table), s"branch-$name/v=$k/w-$bwid"),
-      s"branch-$name/v=$k/w-$bwid", checked, head.partitionBy, Seq.empty,
-      head.columnMap.toMap)
+      s"branch-$name/v=$k/w-$bwid", checked, head.partitionBy,
+      head.bloomColumns, head.columnMap.toMap)
     writeManifestAt(branchManifestPath(table, name, k),
       Manifest(k, System.currentTimeMillis(), "append",
         (head.files ++ entries).map(_.rowCount).sum, head.files ++ entries,
         head.schemaJson, head.partitionBy, head.droppedColumns, Seq.empty,
-        None, head.constraints, head.writeOrder, head.columnMap))
+        None, head.constraints, head.writeOrder, head.columnMap,
+        head.bloomColumns))
     k
   }
 
@@ -3336,10 +3377,13 @@ class TableStore(spark: SparkSession, val warehouse: String) {
     val cmn = n.get("columnMap")
     if (cmn != null) cmn.forEach(e =>
       cmap += ((e.get("l").asText(), e.get("p").asText())))
+    val blooms = ArrayBuffer[String]()
+    val bn = n.get("bloomColumns")
+    if (bn != null) bn.forEach(e => blooms += e.asText())
     Manifest(n.get("version").asLong(), n.get("timestampMs").asLong(),
       n.get("operation").asText(), n.get("rowCount").asLong(), files.toSeq,
       n.get("schemaJson").asText(), spec.toSeq, dropped.toSeq, dels.toSeq,
-      epoch, cons.toSeq, worder.toSeq, cmap.toSeq)
+      epoch, cons.toSeq, worder.toSeq, cmap.toSeq, blooms.toSeq)
   }
 
   private def jsonStr(s: String): String =
@@ -3488,10 +3532,13 @@ class TableStore(spark: SparkSession, val warehouse: String) {
       else m.columnMap.map { case (l, ph) =>
         s"""{"l":${jsonStr(l)},"p":${jsonStr(ph)}}"""
       }.mkString(""","columnMap":[""", ",", "]")
+    val bloomJson =
+      if (m.bloomColumns.isEmpty) ""
+      else m.bloomColumns.map(jsonStr).mkString(""","bloomColumns":[""", ",", "]")
     val json =
       s"""{"version":${m.version},"timestampMs":${m.timestampMs},
          |"operation":${jsonStr(m.operation)},"rowCount":${m.rowCount},
-         |$segsJson"files":$filesJson,"schemaJson":${jsonStr(m.schemaJson)}$specJson$droppedJson$deleteJson$epochJson$consJson$orderJson$cmapJson}""".stripMargin
+         |$segsJson"files":$filesJson,"schemaJson":${jsonStr(m.schemaJson)}$specJson$droppedJson$deleteJson$epochJson$consJson$orderJson$cmapJson$bloomJson}""".stripMargin
     atomicWriteExclusive(dest, json)
   }
 
@@ -3736,6 +3783,18 @@ object TableStore {
   case class ColStats(min: String, max: String, kind: String,
     nulls: Long = -1L)
 
+  /** "file path#physical column" pairs whose parquet footer holds no bloom
+    * filter for the column. A hit here only makes [[TableStore.bloomMayContain]]
+    * answer "may contain" without opening the footer, which is always safe;
+    * the set is cleared when it grows past 65,536 entries. */
+  private val bloomlessFooters =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  private def rememberBloomless(key: String): Unit = {
+    if (bloomlessFooters.size >= 65536) bloomlessFooters.clear()
+    bloomlessFooters.add(key)
+  }
+
   /** String stats compare by unsigned UTF-8 bytes — the order parquet
     * footer stats and Spark's string comparison use. Java's
     * String.compareTo (UTF-16 code units) diverges for supplementary-plane
@@ -3833,5 +3892,6 @@ object TableStore {
     streamEpoch: Option[(String, Long)] = None,
     constraints: Seq[(String, String)] = Seq.empty,
     writeOrder: Seq[String] = Seq.empty,
-    columnMap: Seq[(String, String)] = Seq.empty)
+    columnMap: Seq[(String, String)] = Seq.empty,
+    bloomColumns: Seq[String] = Seq.empty)
 }

@@ -2,18 +2,21 @@ package graft.tools
 
 import java.lang.management.ManagementFactory
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev-only profiler for SparkEntry queries, in the bench's session
   * ([[graft.GraftSession]]). Each query is warmed up once at sf0.001, as
   * the bench does, then run `reps` times. Per rep it prints one summary
-  * line: wall time, rows, Spark job count, summed job time, driver gap
-  * (wall time outside every job: planning, commits, micro-batch
-  * machinery), process CPU-s and GC ms. After it come the jobs of at least
+  * line: wall time, rows, SQL query executions, Spark job count, summed
+  * job time, driver gap (wall time outside every job: planning, commits,
+  * micro-batch machinery), process CPU-s and GC ms. After it come the jobs of at least
   * 50 ms with their descriptions, and each streaming trigger's
   * `durationMs` split (addBatch / getBatch / latestOffset / queryPlanning
   * / walCommit / commitOffsets / triggerExecution).
@@ -35,6 +38,18 @@ object Profile {
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       Option(jobs.get(e.jobId)).foreach(_.end = e.time)
+  }
+
+  /** SQL query executions, failed ones included (`collect`, `count`,
+    * writes; each may run several Spark jobs). */
+  private final class QueryCount extends QueryExecutionListener {
+    val n = new AtomicInteger()
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+      n.incrementAndGet(); ()
+    }
+    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = {
+      n.incrementAndGet(); ()
+    }
   }
 
   private final class TriggerLog extends StreamingQueryListener {
@@ -70,7 +85,9 @@ object Profile {
     spark.sparkContext.setLogLevel("ERROR")
     val jobLog = new JobLog
     val triggerLog = new TriggerLog
+    val queries = new QueryCount
     spark.sparkContext.addSparkListener(jobLog)
+    spark.listenerManager.register(queries)
     spark.streams.addListener(triggerLog)
     val os = ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
@@ -85,6 +102,7 @@ object Profile {
         Thread.sleep(200) // let the warmup's or last rep's events drain
         jobLog.jobs.clear()
         triggerLog.lines.clear()
+        queries.n.set(0)
         val cpu0 = os.getProcessCpuTime
         val gc0 = gcMs()
         val t0 = System.currentTimeMillis()
@@ -97,7 +115,7 @@ object Profile {
         val jobSum = jobs.map { case (_, j) => j.end - j.start }.sum
         val gap = (t1 - t0) - busyMs(jobs.map(_._2), t0, t1)
         println(f"[profile] $q rep$rep: wall ${(t1 - t0) / 1e3}%.2f s, $n rows, " +
-          f"${jobs.size} jobs, job sum ${jobSum / 1e3}%.2f s, " +
+          f"${queries.n.get} queries, ${jobs.size} jobs, job sum ${jobSum / 1e3}%.2f s, " +
           f"driver gap ${gap / 1e3}%.2f s, cpu $cpuS%.1f s, gc $gc ms")
         jobs.foreach { case (id, j) =>
           val d = (j.end - j.start) / 1e3

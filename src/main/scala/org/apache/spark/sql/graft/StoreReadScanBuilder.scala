@@ -662,7 +662,8 @@ class GraftStatsScan(spark: SparkSession, warehouse: String, tableName: String,
     val inLists = graft.catalog.RuntimePruning.inListsOf(predicates)
     if (inLists.nonEmpty) {
       val (hit, _) = graft.catalog.RuntimePruning.pruneByInLists(
-        new TableStore(spark, warehouse), tableName, files, inLists)
+        new TableStore(spark, warehouse), tableName, files, inLists,
+        readSchema())
       if (hit.size < files.size) {
         files = hit
         innerScan = rebuild(files)

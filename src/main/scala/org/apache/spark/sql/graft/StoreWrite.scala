@@ -243,9 +243,14 @@ private class GraftWrite(warehouse: String, table: String, schema: StructType,
     // staged CREATE/REPLACE defines a fresh schema identity: logical
     // names ARE the physical names, whatever the snapshot being replaced
     // had pinned
-    val cmap =
-      if (stagedSink.isDefined) Map.empty[String, String]
-      else new TableStore(spark, warehouse).columnMapOf(table)
+    val current =
+      if (stagedSink.isDefined) None
+      else new TableStore(spark, warehouse).manifests(table).lastOption
+    val cmap = current.map(_.columnMap.toMap).getOrElse(Map.empty[String, String])
+    // the table's bloom columns ride every write, as in TableStore's own
+    // data-file writes; a staged CREATE/REPLACE starts without any
+    val blooms = current.map(_.bloomColumns).getOrElse(Seq.empty)
+      .filter(schema.fieldNames.contains)
     val pSchema =
       if (cmap.isEmpty) schema
       else StructType(schema.fields.map(f =>
@@ -254,6 +259,8 @@ private class GraftWrite(warehouse: String, table: String, schema: StructType,
     // after prepareWrite: it stamps the session's timestamp type; store
     // files must be TIMESTAMP_MICROS for orderable footer stats
     job.getConfiguration.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    blooms.foreach(c => job.getConfiguration.set(
+      s"parquet.bloom.filter.enabled#${cmap.getOrElse(c, c)}", "true"))
     new GraftWriterFactory(factory, pSchema,
       new SerializableConfiguration(job.getConfiguration), stagingDir,
       partitionBy, spark.sessionState.conf.sessionLocalTimeZone)

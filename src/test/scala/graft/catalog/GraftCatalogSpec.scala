@@ -21,6 +21,27 @@ class GraftCatalogSpec extends SparkSpec {
     f(new TableStore(spark, wh), cat)
   }
 
+  /** Every GraftStatsScan of an executed plan, inside adaptive query
+    * stages too. */
+  private def statsScans(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.graft.GraftStatsScan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val self = p match {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.scan match {
+          case g: org.apache.spark.sql.graft.GraftStatsScan => Seq(g)
+          case _ => Seq.empty
+        }
+      case _ => Seq.empty
+    }
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case o => o.children
+    }
+    self ++ kids.flatMap(statsScans)
+  }
+
   test("SQL reads resolve through the catalog with pushdown intact") {
     withCatalog { (store, cat) =>
       store.commit("t", (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "s"), "create")
@@ -353,30 +374,55 @@ class GraftCatalogSpec extends SparkSpec {
       // and the inspected plan's scan would never see the runtime filter
       val n = df.collect().head.getLong(0)
       assert(n == 300L) // 3 hot keys × 100 rows each
-      import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      def scans(p: SparkPlan): Seq[org.apache.spark.sql.graft.GraftStatsScan] = {
-        val self = p match {
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            b.scan match {
-              case g: org.apache.spark.sql.graft.GraftStatsScan => Seq(g)
-              case _ => Seq.empty
-            }
-          case _ => Seq.empty
-        }
-        val kids = p match {
-          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-          case s: QueryStageExec => Seq(s.plan)
-          case o => o.children
-        }
-        self ++ kids.flatMap(scans)
-      }
-      val factScan = scans(df.queryExecution.executedPlan)
+      val factScan = statsScans(df.queryExecution.executedPlan)
         .find(_.table == "fact")
       assert(factScan.isDefined, "fact-side GraftStatsScan not found in plan")
       val total = store.manifests("fact").maxBy(_.version).files.size
       assert(factScan.get.currentFileCount < total,
         s"runtime filter did not prune: ${factScan.get.currentFileCount}/$total files")
+    }
+  }
+
+  test("runtime file pruning on a DATE partition keeps the matching day") {
+    withCatalog { (store, cat) =>
+      // identity partitions fold DATE values into "string" stats
+      // ("2024-01-05"), while Spark's runtime IN-list carries epoch days:
+      // the two must meet in one domain, or every fact file is dropped
+      val days = (0 until 20).map(i => java.sql.Date.valueOf("2024-01-01")
+        .toLocalDate.plusDays(i.toLong))
+      val fact = spark.range(20000).select(col("id"),
+        date_add(lit(java.sql.Date.valueOf("2024-01-01")), (col("id") % 20).cast("int"))
+          .as("d"), (col("id") * 3).as("v"))
+      store.commitPartitioned("fact", fact, Seq("d"), "create")
+      store.commit("dim", days.zipWithIndex.map { case (d, i) =>
+        (java.sql.Date.valueOf(d), if (i == 4) "hot" else "cold")
+      }.toDF("d", "tag"), "create")
+      val df = spark.sql(
+        s"""SELECT count(*) AS n FROM $cat.ns.fact f
+           |JOIN $cat.ns.dim d ON f.d = d.d WHERE d.tag = 'hot'""".stripMargin)
+      assert(df.collect().head.getLong(0) == 1000L)
+      val factScan = statsScans(df.queryExecution.executedPlan)
+        .find(_.table == "fact")
+      val total = store.manifests("fact").maxBy(_.version).files.size
+      assert(factScan.exists(_.currentFileCount < total),
+        s"runtime filter did not prune: ${factScan.map(_.currentFileCount)}/$total files")
+    }
+  }
+
+  test("SQL INSERT writes the table's bloom filters") {
+    withCatalog { (store, cat) =>
+      store.commit("t", Seq((1L, "a"), (3L, "c")).toDF("id", "s").coalesce(1),
+        "create", bloomColumns = Seq("id"))
+      val first = store.manifests("t").maxBy(_.version).files
+      spark.sql(s"""INSERT INTO $cat.ns.t
+        |SELECT /*+ COALESCE(1) */ * FROM VALUES (2L, 'b'), (4L, 'd') AS v(id, s)"""
+        .stripMargin)
+      val m = store.manifests("t").maxBy(_.version)
+      assert(m.bloomColumns == Seq("id") && m.files.size == 2)
+      // 3 lies inside the inserted file's [2, 4] range: only that file's
+      // bloom can rule it out
+      val (hit, _) = store.filesHitByKeys("t", "id", Seq(3L).toDF("id"))
+      assert(hit == first, s"SQL-written file lost its bloom: hit=${hit.map(_.path)}")
     }
   }
 

@@ -796,4 +796,144 @@ class TableStoreSpec extends SparkSpec {
     assert(store.readVersion("t", 1).count() == 1)
     assert(store.readIncremental("t", 1, 2).count() == 2)
   }
+
+  /** SQL query executions `body` runs, read off a QueryExecutionListener.
+    * A marker query after `body` flushes the listener bus: events arrive
+    * in order, so once the marker is seen every earlier one has been. */
+  private def sqlExecutions(body: => Unit): Int = {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.sql.execution.QueryExecution
+    val marker = "__executions_marker__"
+    val execs = new AtomicInteger(0)
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def record(qe: QueryExecution): Unit =
+        if (qe.logical.toString.contains(marker)) seen.countDown()
+        else { execs.incrementAndGet(); () }
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        record(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        record(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(org.apache.spark.sql.functions.lit(marker)).collect()
+      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the marker query")
+      execs.get()
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Two files whose id ranges fully overlap (odds, evens), with a bloom
+    * on `id`: only the bloom separates them. */
+  private def oddEvenBloomTable(store: TableStore): Unit = {
+    val odds = (1L to 99L by 2).map(i => (i, s"o$i"))
+    val evens = (2L to 100L by 2).map(i => (i, s"e$i"))
+    store.commit("t", spark.sparkContext.parallelize(odds ++ evens, 2)
+      .toDF("id", "s"), "create", bloomColumns = Seq("id"))
+    assert(store.manifests("t").maxBy(_.version).files.size == 2)
+  }
+
+  test("filesHitByKeys decides a bounded key set with one SQL execution") {
+    val store = new TableStore(spark, tmpDir("ts"))
+    oddEvenBloomTable(store)
+    val keys = Seq(2L, 4L).toDF("id")
+    var hit = Seq.empty[TableStore.FileEntry]
+    val n = sqlExecutions { hit = store.filesHitByKeys("t", "id", keys)._1 }
+    assert(n == 1, s"expected one key collect, ran $n SQL executions")
+    // the range test alone hits both files; the bloom keeps only the evens
+    assert(hit.size == 1 && store.readFiles("t", hit)
+      .filter(org.apache.spark.sql.functions.col("id") === 2L).count() == 1)
+  }
+
+  test("filesHitByKeys above bloomMaxKeys falls back to the range join, without blooms") {
+    val store = new TableStore(spark, tmpDir("ts"))
+    oddEvenBloomTable(store)
+    val keys = Seq(2L, 4L, 6L).toDF("id")
+    assert(store.filesHitByKeys("t", "id", keys)._1.size == 1)
+    store.bloomMaxKeys = 2
+    var result = (Seq.empty[TableStore.FileEntry], Seq.empty[TableStore.FileEntry])
+    val n = sqlExecutions { result = store.filesHitByKeys("t", "id", keys) }
+    // the bounded key collect, then one range join for the one stat kind
+    assert(n == 2, s"expected key collect + range join, ran $n SQL executions")
+    assert(result._1.size == 2 && result._2.isEmpty,
+      "a key set above the bound is range-pruned only: both files overlap")
+  }
+
+  test("filesHitByKeys driver decisions equal the range join on bloom-less files") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.DataFrame
+    // Each layout: 4 range-clustered files (disjoint ranges); keys land in
+    // some files, in a gap or beyond every file. The range join (forced
+    // with bloomMaxKeys = 0) is the reference the driver path must match.
+    def check(name: String, store: TableStore, column: String, keys: DataFrame): Unit = {
+      val (hit, untouched) = store.filesHitByKeys("t", column, keys)
+      store.bloomMaxKeys = 0
+      val (hitJ, untouchedJ) =
+        try store.filesHitByKeys("t", column, keys)
+        finally store.bloomMaxKeys = 10000
+      assert(hit.map(_.path).toSet == hitJ.map(_.path).toSet &&
+        untouched.map(_.path).toSet == untouchedJ.map(_.path).toSet,
+        s"$name: driver hit ${hit.map(_.path)} vs range join ${hitJ.map(_.path)}")
+      assert(hit.nonEmpty && untouched.nonEmpty, s"$name: pruning should be selective")
+    }
+    def layout(name: String, values: DataFrame, keys: DataFrame): Unit = {
+      val store = new TableStore(spark, tmpDir("ts"))
+      store.commit("t", values.repartitionByRange(4, col("v")), "create")
+      assert(store.manifests("t").maxBy(_.version).files.size == 4, name)
+      check(name, store, "v", keys)
+    }
+    val ids = (1L to 400L).toDF("i")
+    layout("long", ids.select(col("i").as("v")), Seq(5L, 6L, 1000L).toDF("v"))
+    layout("double", ids.select((col("i") * 1.5).as("v")),
+      Seq(7.5, 8.25, 1000.0).toDF("v"))
+    layout("string", ids.select(org.apache.spark.sql.functions
+      .format_string("k%04d", col("i")).as("v")), Seq("k0005", "k00051", "zz").toDF("v"))
+    layout("decimal", ids.select((col("i") / 100).cast("decimal(18,2)").as("v")),
+      Seq("0.05", "0.06", "99.99").toDF("v").select(col("v").cast("decimal(18,2)")))
+    layout("timestamp",
+      ids.select(org.apache.spark.sql.functions.timestamp_seconds(
+        col("i") + lit(1704067200L)).as("v")),
+      Seq(java.sql.Timestamp.valueOf("2024-01-01 00:00:05"),
+        java.sql.Timestamp.valueOf("2030-01-01 00:00:00")).toDF("v"))
+    layout("date",
+      ids.select(org.apache.spark.sql.functions.date_add(
+        lit(java.sql.Date.valueOf("2024-01-01")), col("i").cast("int")).as("v")),
+      Seq(java.sql.Date.valueOf("2024-01-06"), java.sql.Date.valueOf("2030-01-01"))
+        .toDF("v"))
+    // date: partition-derived "string" stats next to footer "long"
+    // (epoch-day) stats of a spec-less commit
+    val store = new TableStore(spark, tmpDir("ts"))
+    val days = (1 to 3).map(i => java.sql.Date.valueOf(s"2024-01-0$i"))
+    store.commitPartitioned("t", days.take(2).zipWithIndex
+      .map { case (d, i) => (i.toLong, d) }.toDF("id", "day"), Seq("day"), "create")
+    store.commitFiles("t", store.manifests("t").maxBy(_.version).files,
+      Some(Seq((9L, days(2))).toDF("id", "day")), "append")
+    assert(store.manifests("t").maxBy(_.version).files
+      .flatMap(_.stats.get("day")).map(_.kind).distinct.size == 2)
+    check("date, mixed stat kinds", store, "day", Seq(days(0), days(2)).toDF("day"))
+  }
+
+  test("bloom columns carry into copy-on-write rewrites") {
+    val store = new TableStore(spark, tmpDir("ts"))
+    oddEvenBloomTable(store)
+    val oddFile = store.filesHitByKeys("t", "id", Seq(3L).toDF("id"))._1
+    assert(oddFile.size == 1)
+    Merge.into(store, "t")
+      .using(Seq((2L, "updated")).toDF("id", "s"))
+      .on(Seq("id"))
+      .whenMatchedUpdate()
+      .run()
+    val m = store.manifests("t").maxBy(_.version)
+    assert(m.operation == "merge" && m.bloomColumns == Seq("id"))
+    assert(m.files.contains(oddFile.head), "the odd file must carry untouched")
+    // an odd key overlaps the rewritten evens file's range: only a bloom
+    // written by the merge can rule that file out
+    val (hit, untouched) = store.filesHitByKeys("t", "id", Seq(3L).toDF("id"))
+    assert(hit == oddFile && untouched.nonEmpty,
+      s"rewritten files lost their blooms: hit=${hit.map(_.path)}")
+    assert(store.read("t").filter(org.apache.spark.sql.functions.col("s") === "updated")
+      .count() == 1)
+  }
 }
